@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JDouble, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
+import BenchMetricsListener.rounded
 
 /** Driver benchmark: runs every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints one JSON line with per-query seconds and statuses.
@@ -8,35 +11,16 @@ import org.apache.spark.sql.SparkSession
   * "unable to send heartbeats to driver more than 60 times" while the
   * host was loaded, then reported the unexecuted queries as
   * milliseconds):
-  *   - a local-mode JVM must never heartbeat-suicide: the executor and
-  *     driver share the process, so a long GC pause starves the
-  *     heartbeater RPC without anything actually being wrong — raise
-  *     the failure tolerance and timeouts instead of dying;
+  *   - a local-mode JVM must never heartbeat-suicide — the shared
+  *     session ([[GraftSession]]) carries the heartbeat headroom;
   *   - every query reports ok/err and the process exits nonzero on any
   *     error, so a failed run cannot masquerade as a fast one.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine, like Verify — a hard-coded 4 silently
-    // quarters throughput when the caller forgets the env var.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NTZ-vintage events.ts casts wall clock → instant through the
-      // session zone; UTC keeps it identical to the oracle's naive read.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Heartbeat headroom (see scaladoc): tolerate minutes-long GC /
-      // CPU starvation on a loaded host rather than exiting mid-run.
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.executor.heartbeat.maxFailures", "10000")
-      .config("spark.network.timeout", "600s")
-      .config("spark.rpc.askTimeout", "600s")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus)
       // Report sessions rebuild the same processed-zone prefixes per
       // query; persist them once (PlanCache) like the reference's
       // staged zones persist between jobs.
@@ -61,13 +45,13 @@ object Bench {
       // job pays JIT + codegen compilation, which inflated the start-
       // edge probe 2-30x over the end-edge one on an IDLE box — the
       // probe must measure the host, not the JVM's cold start
-      spark.range(0, 20000000L, 1, cpus.toInt)
+      spark.range(0, 20000000L, 1, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s").collect(): Unit
       val c0 = System.nanoTime()
       // bit_xor, not sum: summing 200M 64-bit hashes overflows Long
       // under ANSI semantics (measured, stage-0 crash); xor folds the
       // same codegen'd hash work overflow-free
-      spark.range(0, 200000000L, 1, cpus.toInt)
+      spark.range(0, 200000000L, 1, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s").collect(): Unit
       val cpuSec = (System.nanoTime() - c0) / 1e9
       val i0 = System.nanoTime()
@@ -151,31 +135,13 @@ object Bench {
     val results = firstPass.map { case (name, dt, err, _) =>
       (name, math.min(dt, reruns.getOrElse(name, Double.MaxValue)), err)
     }
-    // JSON string escape for anything that could carry quotes,
-    // backslashes, or control chars (exception text) — an unescaped
-    // message would make the one line the driver parses unparseable
-    // exactly in the failing-run case it exists to report.
-    def esc(s: String): String = s.take(160).flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val st = results.map { case (k, _, e) =>
-      s"\"" + k + "\":\"" + e.fold("ok")(m => "err:" + esc(m)) + "\"" }
-      .mkString("{", ",", "}")
-    val firstJson = firstPass.filter(r => rerunNames.contains(r._1))
-      .map { case (k, v, _, _) => s"\"" + k + f"\":$v%.2f" }.mkString("{", ",", "}")
-    // First-pass resources: the plan's volume, not the host's mood —
-    // wall gets the min-of-two estimator, bytes don't need one.
-    val resJson = firstPass
-      .map { case (k, _, _, r) => s"\"" + k + "\":" + BenchMetricsListener.json(r) }
-      .mkString("{", ",", "}")
+    // Every line goes through json4s: exception text can carry quotes,
+    // backslashes or control chars, and an unescaped message would make
+    // the one line the driver parses unparseable exactly in the
+    // failing-run case it exists to report.
+    def obj(fields: Seq[(String, JValue)]): JValue = JObject(fields.toList)
+    def status(err: Option[String]): JValue =
+      JString(err.fold("ok")(m => "err:" + m.take(160)))
     val nErr = results.count(_._3.nonEmpty) + prepErr.size
     val total = results.map(_._2).sum
     // What a FRESH session pays end-to-end: side-table prep plus every
@@ -185,8 +151,23 @@ object Bench {
     // (VERDICT r7 #3).
     val coldTotal = prepSec + firstPass.map(_._2).sum
     val (ioSec1, cpuSec1) = sentinel()
-    val sentinelJson = f"""{"cpu_sec":$cpuSec0%.2f,"io_sec":$ioSec0%.2f,"cpu_sec_end":$cpuSec1%.2f,"io_sec_end":$ioSec1%.2f}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"prep":$prepSec,"prep_status":"${prepErr.fold("ok")(m => "err:" + esc(m))}","sentinel":$sentinelJson,"queries":$qs,"status":$st,"first_pass":$firstJson,"resources":$resJson,"errors":$nErr,"sf":"$sfDir"}"""
+    val sentinelJson = obj(Seq("cpu_sec" -> rounded(cpuSec0, 2),
+      "io_sec" -> rounded(ioSec0, 2), "cpu_sec_end" -> rounded(cpuSec1, 2),
+      "io_sec_end" -> rounded(ioSec1, 2)))
+    val full = compact(obj(Seq(
+      "metric" -> JString("total"), "value" -> JDouble(total),
+      "unit" -> JString("sec"), "cold_total" -> JDouble(coldTotal),
+      "prep" -> JDouble(prepSec), "prep_status" -> status(prepErr),
+      "sentinel" -> sentinelJson,
+      "queries" -> obj(results.map { case (k, v, _) => k -> JDouble(v) }),
+      "status" -> obj(results.map { case (k, _, e) => k -> status(e) }),
+      "first_pass" -> obj(firstPass.filter(r => rerunNames.contains(r._1))
+        .map { case (k, v, _, _) => k -> rounded(v, 2) }),
+      // First-pass resources: the plan's volume, not the host's mood —
+      // wall gets the min-of-two estimator, bytes don't need one.
+      "resources" -> obj(firstPass.map { case (k, _, _, r) =>
+        k -> BenchMetricsListener.json(r) }),
+      "errors" -> JInt(nErr), "sf" -> JString(sfDir))))
     // Full per-query detail to a file (humans + regression diffing)...
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_FULL.json"), full + "\n")
@@ -199,12 +180,18 @@ object Bench {
     // keys plus the 12 slowest queries and the failing ones, and stays
     // well inside the window, so whichever parseable line the driver
     // picks up from the tail, it gets the real totals.
-    val slow = results.sortBy(-_._2).take(12)
-      .map { case (k, v, _) => s"\"" + k + f"\":$v%.2f" }.mkString(",")
-    val failed = results.filter(_._3.nonEmpty).take(10)
-      .map { case (k, _, e) => s"\"" + k + "\":\"err:" + esc(e.get) + "\"" }
-      .mkString(",")
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","cold_total":$coldTotal%.2f,"prep":$prepSec%.2f,"prep_status":"${prepErr.fold("ok")(m => "err:" + esc(m))}","sentinel":$sentinelJson,"n_queries":${results.size},"errors":$nErr,"mean_sec":${total / math.max(1, results.size)}%.3f,"queries":{$slow},"failed":{$failed},"detail":"BENCH_FULL.json","sf":"$sfDir"}""")
+    println(compact(obj(Seq(
+      "metric" -> JString("total"), "value" -> rounded(total, 2),
+      "unit" -> JString("sec"), "cold_total" -> rounded(coldTotal, 2),
+      "prep" -> rounded(prepSec, 2), "prep_status" -> status(prepErr),
+      "sentinel" -> sentinelJson, "n_queries" -> JInt(results.size),
+      "errors" -> JInt(nErr),
+      "mean_sec" -> rounded(total / math.max(1, results.size), 3),
+      "queries" -> obj(results.sortBy(-_._2).take(12)
+        .map { case (k, v, _) => k -> rounded(v, 2) }),
+      "failed" -> obj(results.filter(_._3.nonEmpty).take(10)
+        .map { case (k, _, e) => k -> status(e) }),
+      "detail" -> JString("BENCH_FULL.json"), "sf" -> JString(sfDir)))))
     PlanCache.clear()
     spark.stop()
     if (nErr > 0) sys.exit(1)

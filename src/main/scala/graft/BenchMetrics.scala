@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.json4s.{JDouble, JObject, JValue}
 
 /** Per-query resource accounting for the bench (VERDICT r12 #3): wall
   * ratios alone can hide a cliff that only shows on a real cluster —
@@ -55,11 +56,15 @@ final class BenchMetricsListener extends SparkListener {
 }
 
 object BenchMetricsListener {
+  /** `v` rounded half-up to `digits` decimals, as a JSON number. */
+  def rounded(v: Double, digits: Int): JValue =
+    JDouble(BigDecimal(v).setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble)
+
   /** One JSON object per query: MBs, one decimal — enough to spot a
     * 10× jump, compact enough for 400+ rows in BENCH_FULL.json. */
-  def json(s: (Long, Long, Long, Long)): String = {
-    def mb(b: Long): String = f"${b / 1048576.0}%.1f"
-    s"""{"sh_r_mb":${mb(s._1)},"sh_w_mb":${mb(s._2)},""" +
-      s""""spill_mb":${mb(s._3)},"peak_task_mem_mb":${mb(s._4)}}"""
+  def json(s: (Long, Long, Long, Long)): JValue = {
+    def mb(b: Long): JValue = rounded(b / 1048576.0, 1)
+    JObject("sh_r_mb" -> mb(s._1), "sh_w_mb" -> mb(s._2),
+      "spill_mb" -> mb(s._3), "peak_task_mem_mb" -> mb(s._4))
   }
 }

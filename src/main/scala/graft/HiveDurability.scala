@@ -28,13 +28,9 @@ import graft.io.{Catalog, Writers}
 object HiveDurability {
 
   private def session(workDir: String): SparkSession =
-    SparkSession.builder()
-      .master("local[2]")
+    GraftSession.builder(2)
       .appName("graft-hive-durability")
       .enableHiveSupport()
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
       // Derby-backed metastore rooted in workDir: the durable state.
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",

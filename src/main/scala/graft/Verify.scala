@@ -1,8 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -36,35 +33,14 @@ import scala.concurrent.duration.Duration
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional subset filter for local iteration: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = org.json4s.jackson.Serialization.write(SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) })(org.json4s.DefaultFormats)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n)) }
@@ -73,25 +49,19 @@ object Verify {
     // driver's time budget is the binding constraint at 387 —
     // SPARK_GRAFT_WORKERS overrides for measurement.
     val workers = sys.env.get("SPARK_GRAFT_WORKERS").map(_.toInt)
-      .getOrElse(math.max(2, math.min(8, cpus.toInt)))
-    val pool = Executors.newFixedThreadPool(workers)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      .getOrElse(math.max(2, math.min(8, cpus)))
     val t0 = System.nanoTime()
-    val runs = selected.toSeq.map { case (name, fn) =>
-      Future {
-        val s0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          System.err.println(
-            f"[verify] $name ok ${(System.nanoTime() - s0) / 1e9}%.1fs")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    Concurrent.inParallel(selected.toSeq.map { case (name, fn) => () =>
+      val s0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        System.err.println(
+          f"[verify] $name ok ${(System.nanoTime() - s0) / 1e9}%.1fs")
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    }
-    Await.result(Future.sequence(runs), Duration.Inf)
-    pool.shutdown()
+    }, workers, Duration.Inf)
     System.err.println(
       f"[verify] ${selected.size} queries in ${(System.nanoTime() - t0) / 1e9}%.1fs")
     spark.stop()

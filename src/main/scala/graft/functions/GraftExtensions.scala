@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** Session-extensions packaging for the engine's native functions:
   *
   * {{{
-  *   SparkSession.builder()
+  *   GraftSession.builder(cpus)
   *     .withExtensions(new GraftExtensions)   // or
   *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}
